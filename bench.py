@@ -87,7 +87,7 @@ def force(df) -> None:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(app_name="graphiti_bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
 
     read = lambda name: spark.read.parquet(f"{sf_dir}/{name}.parquet")

@@ -1,28 +1,14 @@
 """Text scalar functions (SURVEY §2.9) — all JVM-side Column exprs.
 
-F8 newline strip (nodes.py:274, edges.py:193), F9 control-char clean
-(llm_client/client.py:68-88), F11 word tokenization for overlap
-(bulk_utils.py:229-231), F12 speaker parse (prompts/extract_nodes.py:105).
+F11 word tokenization for overlap (bulk_utils.py:229-231), F12 speaker
+parse (prompts/extract_nodes.py:105). F9 control-char cleaning lives in
+rules.py, at every rule-engine input boundary.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def strip_newlines(col: Column) -> Column:
-    return F.regexp_replace(col, "\n", " ")
-
-
-def clean_input(col: Column) -> Column:
-    """Drop zero-width/invisible unicode and control chars except
-    \\t \\n \\r — exactly the reference _clean_input charset
-    (llm_client/client.py:68-88). Same class as rules.CLEAN_PATTERN_PY,
-    applied at every rule-engine input boundary."""
-    from graphiti_spark import rules
-
-    return F.regexp_replace(col, rules.CLEAN_PATTERN_PY, "")
 
 
 def tokens(col: Column) -> Column:

@@ -49,16 +49,8 @@ def py_md5(*parts: str) -> str:
     return hashlib.md5(SEP.join(parts).encode("utf-8")).hexdigest()
 
 
-def py_episode_uuid(group_id: str, conv_id: str, turn_idx: int) -> str:
-    return py_md5("ep", group_id, conv_id, str(turn_idx))
-
-
 def py_entity_uuid(group_id: str, name: str) -> str:
     return py_md5("en", group_id, name.lower())
-
-
-def py_edge_uuid(group_id: str, episode_uuid_: str, subj: str, pred: str, obj: str) -> str:
-    return py_md5("ed", group_id, episode_uuid_, subj, pred, obj)
 
 
 # SQL fragment twins (DuckDB oracle) — keep in sync with the column fns above.

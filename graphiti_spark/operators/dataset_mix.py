@@ -373,7 +373,8 @@ def split_assign(
     split absorbs rounding. Map-only: no shuffle, no state.
     """
     total = sum(fractions.values())
-    assert abs(total - 1.0) < 1e-9, f"fractions sum to {total}, want 1.0"
+    if abs(total - 1.0) >= 1e-9:
+        raise ValueError(f"fractions sum to {total}, want 1.0")
     bucket = F.substring(
         F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string"))), 1, 8
     )

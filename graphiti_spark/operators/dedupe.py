@@ -192,7 +192,7 @@ def resolve_nodes(
     # replaced the old CC driver probe + groups-union, which consumed
     # the pair set three ways and forced an eager localCheckpoint here.
     # Sharing of uuid_map across downstream actions is the caller's
-    # concern (pipeline.build_graph lazily checkpoints it) — keeping
+    # concern (pipeline.build_graph checkpoints it) — keeping
     # resolve_nodes action-free also avoids the cluster-mode
     # executor-loss hazard of eager localCheckpoint blocks.
     dups = duplicate_pairs(candidate_pairs(entities, max_df=max_df))

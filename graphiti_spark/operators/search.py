@@ -119,32 +119,6 @@ def cosine_search(
     )
 
 
-def topk_per_probe(
-    probes: DataFrame,
-    index: DataFrame,
-    probe_vec: str,
-    index_vec: str,
-    probe_id: str,
-    index_id: str,
-    join_keys: list[str],
-    k: int,
-    min_score: float,
-) -> DataFrame:
-    """J1/J2/J3 core: per-probe top-k similarity join, blocked on
-    `join_keys` equi-join (group_id and/or endpoints) so the pair space
-    is bounded before the cosine filter; per-probe window top-k."""
-    joined = (
-        probes.join(index, join_keys)
-        .withColumn(
-            "score",
-            emb.dot(F.col(probe_vec).cast("array<double>"), F.col(index_vec).cast("array<double>")),
-        )
-        .filter(F.col("score") >= min_score)
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.desc("score"), F.asc(index_id))
-    return joined.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k).drop("rn")
-
-
 def bfs_neighborhood(
     edges: DataFrame,
     origin_uuids: list[str] | DataFrame,

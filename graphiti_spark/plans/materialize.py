@@ -62,59 +62,45 @@ def merge_parquet(
     (VERDICT r1 #2). Each touched bucket directory is swapped with
     os.replace (per-bucket atomic; a crash mid-merge leaves other
     buckets at their old, internally consistent state — same contract
-    as Iceberg's per-partition commit granularity emulated here)."""
-    updates = with_group_bucket(updates.dropDuplicates([key]), n_buckets)
+    as Iceberg's per-partition commit granularity emulated here).
 
-    def _sorted(df: DataFrame) -> DataFrame:
-        if sort_within:
-            return df.sortWithinPartitions("group_bucket", *sort_within)
-        return df
-
-    part_dirs = (
-        [d for d in os.listdir(path) if d.startswith("group_bucket=")]
-        if os.path.exists(path)
-        else []
+    The deduplicated, bucketed input is checkpointed once; the touched
+    buckets are collected from, and the write reads, that checkpoint.
+    An empty input writing a new table is written unpartitioned (a
+    partitioned write of an empty frame emits no schema footer), so the
+    table stays readable; a later non-empty merge replaces that form."""
+    updates = with_group_bucket(updates.dropDuplicates([key]), n_buckets).localCheckpoint()
+    touched = [int(r[0]) for r in updates.select("group_bucket").distinct().collect()]
+    has_buckets = os.path.exists(path) and any(
+        d.startswith("group_bucket=") for d in os.listdir(path)
     )
-    if part_dirs:
-        # incremental path: restrict merge to touched buckets only
-        touched = [
-            int(r[0])
-            for r in updates.select("group_bucket").distinct().collect()
-        ]
-        if not touched:
-            return
+    if has_buckets and not touched:
+        return
+    merged = updates
+    if has_buckets:
         existing = spark.read.parquet(path).filter(F.col("group_bucket").isin(touched))
         kept = existing.join(updates.select(key), key, "left_anti")
         merged = kept.unionByName(updates.select(existing.columns))
-        tmp = f"{path}.tmp-{_uuid.uuid4().hex[:8]}"
-        _sorted(merged).write.mode("overwrite").partitionBy("group_bucket").parquet(tmp)
-        for b in touched:
-            src_dir = f"{tmp}/group_bucket={b}"
-            dst_dir = f"{path}/group_bucket={b}"
-            if not os.path.exists(src_dir):
-                os.makedirs(src_dir, exist_ok=True)  # bucket merged to empty
-            if os.path.exists(dst_dir):
-                shutil.rmtree(dst_dir)
-            os.replace(src_dir, dst_dir)
-        shutil.rmtree(tmp)
-        return
-    # first write (or prior table was the unpartitioned empty form)
-    if os.path.exists(path):
-        existing = spark.read.parquet(path)
-        kept = existing.join(updates.select(key), key, "left_anti")
-        merged = kept.unionByName(updates.select(existing.columns))
-    else:
-        merged = updates
     tmp = f"{path}.tmp-{_uuid.uuid4().hex[:8]}"
-    if merged.isEmpty():
-        # a partitioned write of an empty frame emits no schema footer;
-        # write unpartitioned so the table stays readable
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
+    if not touched:
+        merged.coalesce(1).write.parquet(tmp)
     else:
-        _sorted(merged).write.mode("overwrite").partitionBy("group_bucket").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.replace(tmp, path)
+        if sort_within:
+            merged = merged.sortWithinPartitions("group_bucket", *sort_within)
+        merged.write.partitionBy("group_bucket").parquet(tmp)
+    if not has_buckets:
+        if os.path.exists(path):  # the zero-row form
+            shutil.rmtree(path)
+        os.replace(tmp, path)
+        return
+    # every touched bucket holds at least one update row, so each has a
+    # directory under tmp to swap in
+    for b in touched:
+        dst_dir = f"{path}/group_bucket={b}"
+        if os.path.exists(dst_dir):
+            shutil.rmtree(dst_dir)
+        os.replace(f"{tmp}/group_bucket={b}", dst_dir)
+    shutil.rmtree(tmp)
 
 
 def record_lineage(

@@ -10,8 +10,9 @@ Stages (each checkpointable + lineage-recorded when materializing):
   5 edges        pointer rewrite (P4) → dedupe → bi-temporal
                  invalidation (J6/J7, T1-T3)
   6 mentions     episodic MENTIONS edges (P1), canonical targets
-  7 materialize  merge-parquet all tables + episode entity_edges
-                 back-refs (graphiti.py:517)
+  7 backrefs     episode entity_edges from the resolved edges
+                 (graphiti.py:517)
+  8 materialize  merge-parquet all five tables (run_pipeline)
 
 The whole DAG shuffles on group-scoped keys only; the extraction
 stage is embarrassingly parallel. At 10^12-turn scale the knobs are
@@ -41,20 +42,25 @@ def build_graph(
     transcripts: DataFrame,
     run_ts: str = RUN_TS,
     with_embeddings: bool = True,
-    share: bool = True,
     existing_nodes: DataFrame | None = None,
     salt_hot_conversations: int | None = None,
 ) -> dict[str, DataFrame]:
     """Pure dataflow (no writes): transcripts → all graph tables.
 
-    `share=True` (default) lazily localCheckpoints the shared
-    intermediates (episodes, extraction outputs) so forcing several
-    output tables computes the UDF stages once — the multi-action
-    analog of the reference's LLM disk cache
-    (llm_client/client.py:123-167, SURVEY §4). Measured: ~2.6× faster
-    than recompute and ~2.6× faster than persist() for the 3-table
-    force at sf0.1 (persist's row-cache write path loses to the
-    checkpoint block write here)."""
+    The shared intermediates (episodes, extraction outputs, uuid_map,
+    edges) are localCheckpointed so forcing several output tables
+    computes each layer once — the multi-action analog of the
+    reference's LLM disk cache (llm_client/client.py:123-167, SURVEY
+    §4); the episodes' entity_edges back-references and the edges
+    table share one edge resolution. Measured: ~2.6× faster than
+    recompute and ~2.6× faster than persist() for the 3-table force at
+    sf0.1 (persist's row-cache write path loses to the checkpoint block
+    write here).
+
+    The checkpoints are `eager=False`, but this call is not a lazy
+    plan: under AQE, localCheckpoint runs every shuffle stage upstream
+    of the checkpointed frame when it is called, so building the graph
+    runs most of the pipeline's jobs before any table is forced."""
     # Explicit group-aligned repartition at pipeline entry. Two reasons:
     # (a) co-locate each conversation for every downstream group-keyed
     # op; (b) pin the parallelism of the UDF extraction stage — AQE
@@ -65,9 +71,7 @@ def build_graph(
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     transcripts = transcripts.repartition(n_part, "conv_id")
 
-    episodes = ep_ops.build_episodes(transcripts, created_at=run_ts)
-    if share:
-        episodes = episodes.localCheckpoint(eager=False)
+    episodes = ep_ops.build_episodes(transcripts, created_at=run_ts).localCheckpoint(eager=False)
 
     # NOTE on a measured non-optimization: fusing E1+E3 into one
     # mapInPandas (shared regex captures, tagged union output) was tried
@@ -89,11 +93,8 @@ def build_graph(
         udf_in = episodes.repartition(
             n_part, "group_id", F.floor(F.col("turn_idx") / salt_hot_conversations)
         )
-    mentions_raw = ex.mentions_with_entity_uuid(ex.extract_mentions(udf_in))
-    triples_raw = ex.triples_with_uuids(ex.extract_triples(udf_in))
-    if share:
-        mentions_raw = mentions_raw.localCheckpoint(eager=False)
-        triples_raw = triples_raw.localCheckpoint(eager=False)
+    mentions_raw = ex.mentions_with_entity_uuid(ex.extract_mentions(udf_in)).localCheckpoint(eager=False)
+    triples_raw = ex.triples_with_uuids(ex.extract_triples(udf_in)).localCheckpoint(eager=False)
 
     entities, uuid_map = dd.resolve_nodes(mentions_raw)
     if existing_nodes is not None:
@@ -103,14 +104,13 @@ def build_graph(
         # component onto the existing node's uuid
         matches = gr.match_existing(entities, existing_nodes)
         uuid_map = gr.extend_uuid_map(uuid_map, entities, matches)
-    if share:
-        uuid_map = uuid_map.localCheckpoint(eager=False)
+    uuid_map = uuid_map.localCheckpoint(eager=False)
     nodes = dd.canonical_nodes(entities, uuid_map, run_ts, with_embeddings=with_embeddings)
     if existing_nodes is not None:
         nodes = gr.merge_node_payloads(nodes, existing_nodes)
 
     triples = er.resolve_edge_pointers(triples_raw, uuid_map)
-    edges = er.resolve_edges(triples, run_ts, with_embeddings=with_embeddings)
+    edges = er.resolve_edges(triples, run_ts, with_embeddings=with_embeddings).localCheckpoint(eager=False)
 
     mention_map = F.broadcast(uuid_map.select(F.col("raw_uuid").alias("entity_uuid"), "canonical_uuid"))
     mentions = (
@@ -218,14 +218,12 @@ def run_pipeline(
         if resume and os.path.exists(sentinel):
             counts[name] = -1  # skipped (already materialized)
             continue
-        df = tables[name]
         key = "raw_uuid" if name == "uuid_map" else "uuid"
-        df = df.localCheckpoint()  # cut lineage; stage boundary
         # sort-within-files on valid_at → parquet row-group min/max stats
         # support time-range data skipping (S7 range-index analog)
         sort_within = ["valid_at"] if name in ("episodes", "edges") else None
         mat.merge_parquet(
-            spark, df, f"{out_dir}/{name}.parquet", key=key, sort_within=sort_within
+            spark, tables[name], f"{out_dir}/{name}.parquet", key=key, sort_within=sort_within
         )
         counts[name] = mat.record_lineage(
             spark,

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from graphiti_spark import rules
 from graphiti_spark.operators import dataset_text as dtx
 from graphiti_spark.plans import pipeline as pl
-from graphiti_spark.plans import materialize as mat
 from graphiti_spark.schemas import TRANSCRIPTS
 
 
@@ -79,31 +78,28 @@ def start_incremental_pipeline(
 ):
     """writeStream.foreachBatch(batch KG pipeline → idempotent merges).
 
-    Each micro-batch is a mini add_episode_bulk; merge_parquet keyed on
-    content-derived uuids makes re-delivered batches no-ops."""
+    Each micro-batch is a mini add_episode_bulk: `run_pipeline` under
+    run_id `epoch<epoch_id>`, so it resolves the batch against the graph
+    built so far (alias surfaces arriving in later batches merge onto the
+    existing node, graphiti.py:722-781) and writes all five tables,
+    uuid_map included, with their lineage rows and per-epoch resume
+    sentinels. merge_parquet keyed on content-derived uuids makes
+    re-delivered batches no-ops, and a replayed epoch skips the tables
+    it already merged. The sentinels are keyed by epoch id, so `out_dir`
+    belongs to one `checkpoint_dir`: a query started from a fresh
+    checkpoint numbers its epochs from 0 again and would skip them."""
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        import os
-
-        spark = batch_df.sparkSession
-        # resolve each micro-batch against the graph built so far —
-        # alias surfaces arriving in later batches merge onto the
-        # existing node (graphiti.py:722-781 cross-batch semantics)
-        nodes_path = f"{out_dir}/nodes.parquet"
-        existing_nodes = (
-            spark.read.parquet(nodes_path) if os.path.exists(nodes_path) else None
-        )
-        tables = pl.build_graph(
+        pl.run_pipeline(
+            batch_df.sparkSession,
             batch_df,
+            out_dir,
+            run_id=f"epoch{epoch_id}",
             run_ts=run_ts,
             with_embeddings=with_embeddings,
-            existing_nodes=existing_nodes,
         )
-        for name in ("episodes", "nodes", "edges", "mentions"):
-            key = "uuid"
-            mat.merge_parquet(spark, tables[name].localCheckpoint(), f"{out_dir}/{name}.parquet", key=key)
 
     return (
         stream.writeStream.outputMode("append")

@@ -132,11 +132,6 @@ def transcripts_from_events_chain(spark: SparkSession, sf_dir: str) -> DataFrame
     return spark.sql(CHAIN_TRANSCRIPTS_SQL)
 
 
-def transcripts_sql_cte() -> str:
-    """`transcripts AS (...)` CTE body for DuckDB oracle queries."""
-    return f"transcripts AS ({TRANSCRIPTS_SQL})"
-
-
 # ---------------------------------------------------------------------------
 # Mixed-source episode corpus: message / text / json episode types
 # (reference EpisodeType, nodes.py:35-52; three extraction prompt

@@ -866,6 +866,15 @@ def test_contamination_bloom(spark):
     assert (tiny.n_bloom_hits >= bloom.n_bloom_hits).all()
 
 
+def test_contamination_bloom_rejects_bits_not_multiple_of_8(spark):
+    """The mask holds bits // 8 bytes, so a position in the last
+    bits % 8 bits would index past it."""
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    docs = spark.createDataFrame([(0, " ".join(words))], "doc_id long, text string")
+    with pytest.raises(ValueError, match="multiple of 8"):
+        ddp.contamination_bloom(docs, docs, bits=12).collect()
+
+
 def test_split_assign_and_token_budget(spark):
     from graphiti_spark.operators import dataset_mix as dmx
 
@@ -903,3 +912,9 @@ def test_split_assign_and_token_budget(spark):
                 want.add(r.doc_id)
             acc += r.n_tokens
     assert set(cap.doc_id) == want
+
+
+def test_split_assign_rejects_fractions_not_summing_to_one(spark):
+    df = spark.createDataFrame([(1,)], "doc_id long")
+    with pytest.raises(ValueError, match="sum to"):
+        dmx.split_assign(df, {"train": 0.5, "val": 0.2})
